@@ -91,10 +91,3 @@ def null_out_orphans(
         F.col(link_col).isNotNull() & F.col("__url").isNull(), F.lit(None)
     ).otherwise(F.col(link_col))
     return joined.withColumn(link_col, keep).drop("__url")
-
-
-def orphan_count(messages: DataFrame, content: DataFrame) -> int:
-    """A4 — count of non-null links with no content row
-    (duplicate_remover.py:273-283)."""
-    links = messages.where(F.col("telegraph_link").isNotNull())
-    return anti_join(links, content, "telegraph_link", "url").count()

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import logging
 import math
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -868,103 +869,115 @@ def auto_ivf_cells(
     return resolved
 
 
-def _nearest_cells(
-    src: DataFrame,
-    centroids: DataFrame,
-    n_probe: int,
+def _ivf_prep(
+    embeddings: DataFrame,
+    dim: int,
+    n_cells: int | None,
+    iterations: int,
     id_col: str,
     vec_col: str,
-    carry_norm: bool,
-    emit_csim: bool = False,
-) -> DataFrame:
-    """Assign every ``src`` vector to its ``n_probe`` nearest centroids
-    by cosine (ties broken by cell_id asc — a total order, so both
-    engines pick the same cell). ``centroids`` is (cell_id, cv,
-    __cnrm) — broadcast; ``src`` must carry ``__nrm``.
+    fp_scale: int = 10_000_000,
+    train_sample_mod: int | None = 1,
+) -> tuple[DataFrame, int, list[tuple[int, list[float], float]]]:
+    """The IVF entry points' shared front half: the cached (id, vec,
+    __nrm) frame, the resolved cell count, and the trained cells as
+    driver rows (cell_id, cv, cnrm).
 
-    n_probe=1 (every catalog gate) runs as ONE Arrow map stage (guide
-    §4.2): the centroid matrix is metadata the algorithm already holds
-    driver-side (it was the broadcast build), so it rides the task
-    closure and each batch computes every cosine with vectorized
-    per-dim accumulation — the same sequential fold order as the
-    interpreted zip_with/aggregate tree, so scores are bit-identical
-    (see :func:`_seq_dots`), with the same max(struct(csim, -cell))
-    argmax semantics (:func:`_argmax_rows`; pytest-pinned). This
-    replaces a crossJoin + argmax exchange + corpus-scale id join-back
-    with zero exchanges, and swaps the per-row interpreted HOF fold
-    (the r13 profile's dominant per-task cost) for NumPy batch math.
+    ``n_cells=None`` resolves via :func:`auto_ivf_cells`;
+    ``train_sample_mod=None`` trains on ~64·cells vectors above the
+    calibration anchor (the full corpus at gate scales), the
+    deterministic ``id % mod == 0`` subset. The centroid state stays in
+    Python rows end to end: on this engine a single driver action costs
+    ~0.45 s fixed, so every avoided DataFrame round trip of k×d
+    metadata is real wall time."""
+    from pasta_pipeline_spark.operators.util import pair_verify_parallelism
 
-    n_probe>1 (multiprobe, test/tooling paths) keeps the JVM shape:
-    the slim (id, cell_id, csim) rank window — carrying the vector
-    through that sort multiplied its byte volume ~12× (measured sf1:
-    24 s → 12 s fresh after slimming), so the vector is re-attached by
-    one id join; callers must distinct their pair output (a pair
-    sharing several probed cells collides once per cell).
-    """
-    if n_probe == 1:
-        return _assign_cells_arrow(src, centroids, id_col, vec_col, carry_norm, emit_csim)
-    payload = [F.col(id_col), F.col(vec_col)] + (
-        [F.col("__nrm")] if carry_norm else []
+    # ONE explicit hash exchange on the id, cached: the explicit width
+    # keeps AQE's byte-based coalescing from serializing the
+    # compute-dense assignment and training stages (r14 targeted fix)
+    src = pair_verify_parallelism(
+        embeddings.where(F.size(F.col(vec_col)) == dim).select(
+            F.col(id_col),
+            F.col(vec_col),
+            F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"),
+        ),
+        id_col,
+    ).persist()
+    n = None
+    if n_cells is None:
+        n = src.count()
+        n_cells = auto_ivf_cells(n)
+    if train_sample_mod is None:
+        if n is None:
+            n = src.count()
+        train_sample_mod = (
+            1 if n <= LSH_CALIBRATED_N else max(1, n // (64 * n_cells))
+        )
+    cells = _train_ivf_rows(
+        src, n_cells, iterations, id_col, vec_col, fp_scale, train_sample_mod
     )
-    j = src.select(F.col(id_col), F.col(vec_col), F.col("__nrm")).crossJoin(
-        F.broadcast(centroids)
-    )
-    csim = (dot(F.col(vec_col), F.col("cv")) / (F.col("__nrm") * F.col("__cnrm"))).alias(
-        "__csim"
-    )
-    slim = j.select(F.col(id_col), F.col("cell_id"), csim)
-    assigned = _argmax_cells(slim, n_probe, id_col, "cell_id", emit_csim)
-    return assigned.join(src.select(*payload), id_col)
+    return src, n_cells, cells
 
 
-def _assign_cells_arrow(
+def _flat_layout(
+    cells: list[tuple[int, list[float], float]],
+) -> tuple[list[tuple], list[tuple]]:
+    """The flat assignment as a :func:`_assign_ivf` layout: ONE group
+    (coarse_id 0) holding every cell. A single group ranks first for
+    every vector, so the kernel never scores it."""
+    return [(c, 0, cv, cn) for c, cv, cn in cells], [(0, None, None)]
+
+
+def _assign_ivf(
     src: DataFrame,
-    centroids: DataFrame,
+    layout: tuple[list[tuple], list[tuple]],
     id_col: str,
     vec_col: str,
-    carry_norm: bool,
-    emit_csim: bool = False,
+    n_probe: int = 1,
+    coarse_probe: int = 1,
 ) -> DataFrame:
-    """The n_probe=1 assignment as one mapInPandas stage — see
-    :func:`_nearest_cells`. The payload (vector + norm) passes THROUGH
-    the kernel, so no join re-attaches it and the stage adds zero
-    exchanges. Requires uniform vector length (every caller filters
-    ``size(vec) == dim`` upstream)."""
-    crows = sorted(
-        centroids.select("cell_id", "cv", "__cnrm").collect(),
-        key=lambda r: r["cell_id"],
-    )
-    cells = [int(r["cell_id"]) for r in crows]
-    cvs = [[float(x) for x in r["cv"]] for r in crows]
-    cnrms = [float(r["__cnrm"]) for r in crows]
-    return _assign_cells_arrow_prepared(
-        src, cells, cvs, cnrms, id_col, vec_col, carry_norm, emit_csim
-    )
+    """THE IVF cell assignment: one mapInPandas stage over centroid
+    rows held driver-side. ``layout`` is (cells, groups) — cells as
+    (cell_id, coarse_id, cv, cnrm), groups as (coarse_id, gv, gnrm) —
+    from :func:`_flat_layout` or :func:`_two_level_structs_rows`.
 
+    Each vector probes its ``coarse_probe`` best groups, then its
+    ``n_probe`` best cells among those groups' members, both ranked by
+    cosine desc with NaN greatest (Spark double ordering), then group
+    or cell id asc — a total order, so the DuckDB twins replay it. A
+    zero or NaN vector scores NaN everywhere and lands in the lowest
+    group and cell.
+    Cosines use the sequential per-dim fold (:func:`_seq_dots`), so
+    they are bit-identical to the interpreted zip_with/aggregate tree;
+    flat and n_probe=1 are the single-group and first-rank cases.
 
-def _assign_cells_arrow_prepared(
-    src: DataFrame,
-    cells: list[int],
-    cvs: list[list[float]],
-    cnrms: list[float],
-    id_col: str,
-    vec_col: str,
-    carry_norm: bool,
-    emit_csim: bool = False,
-) -> DataFrame:
-    """:func:`_assign_cells_arrow` over already-collected centroid
-    state (cells ASCENDING — the argmax tie order)."""
+    The payload passes through the kernel, so assignment adds no
+    exchange and no id join-back. Emits one row per (vector, probed
+    cell): (id, coarse_id, cell_id, vec, __nrm, __ccsim) — callers that
+    probe several cells must distinct their pair output. A NaN
+    ``__nrm``/``__ccsim`` comes out NULL (the Arrow conversion), so the
+    pair verify drops it. Requires uniform vector length (callers
+    filter ``size(vec) == dim``) and an ``__nrm`` column on ``src``."""
     from pasta_pipeline_spark.operators.util import ensure_package_on_workers
 
     ensure_package_on_workers(src.sparkSession)
+    cells = sorted(layout[0], key=lambda r: r[0])
+    groups = sorted(layout[1], key=lambda r: r[0])
+    gpos = {g: i for i, (g, _, _) in enumerate(groups)}
+    cell_ids = [c for c, _, _, _ in cells]
+    cell_grp = [gpos[g] for _, g, _, _ in cells]
+    cvs = [cv for _, _, cv, _ in cells]
+    cnrms = [x for _, _, _, x in cells]
+    group_ids = [g for g, _, _ in groups]
+    score_groups = len(groups) > coarse_probe
+    gvs = [gv for _, gv, _ in groups] if score_groups else []
+    gnrms = [x for _, _, x in groups] if score_groups else []
     idt = src.schema[id_col].dataType.simpleString()
     vt = src.schema[vec_col].dataType.simpleString()
-    fields = [f"{id_col} {idt}", "cell_id int", f"{vec_col} {vt}"]
-    if carry_norm:
-        fields.append("__nrm double")
-    if emit_csim:
-        fields.append("__ccsim double")
-    schema = ", ".join(fields)
+    schema = (
+        f"{id_col} {idt}, coarse_id int, cell_id int, {vec_col} {vt}, "
+        "__nrm double, __ccsim double"
+    )
 
     def assign(batches):
         import numpy as np
@@ -972,76 +985,63 @@ def _assign_cells_arrow_prepared(
 
         C = np.array(cvs)
         cn = np.array(cnrms)
-        cid = np.array(cells, dtype=np.int64)
+        cid = np.array(cell_ids, dtype=np.int64)
+        cgrp = np.array(cell_grp, dtype=np.int64)
+        gid = np.array(group_ids, dtype=np.int64)
+        G = np.array(gvs)
+        gn = np.array(gnrms)
+        members = [np.flatnonzero(cgrp == g) for g in range(len(gid))]
         for pdf in batches:
-            if len(pdf) == 0:
+            n = len(pdf)
+            if n == 0 or not cell_ids:
                 continue
             V = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
             )
             nr = pdf["__nrm"].to_numpy(dtype=np.float64)
-            with np.errstate(all="ignore"):
-                scores = [
-                    _seq_dots(V, C[c]) / (nr * cn[c]) for c in range(len(cells))
-                ]
-            best, bestpos = _argmax_rows(scores)
-            out = {
-                id_col: pdf[id_col].values,
-                "cell_id": cid[bestpos].astype("int32"),
-                vec_col: pdf[vec_col].values,
-            }
-            if carry_norm:
-                out["__nrm"] = nr
-            if emit_csim:
-                out["__ccsim"] = best
-            yield pd.DataFrame(out)
+            probed = None  # every group
+            if score_groups:
+                with np.errstate(all="ignore"):
+                    gscores = [
+                        _seq_dots(V, G[g]) / (nr * gn[g]) for g in range(len(gid))
+                    ]
+                probed = np.zeros((len(gid), n), dtype=bool)
+                for _, gbest in _topk_rows(gscores, coarse_probe):
+                    probed[gbest, np.arange(n)] = True
+            fscores = [None] * len(cid)
+            for g, mem in enumerate(members):
+                m = None if probed is None else probed[g]
+                Vg, nrg = (V, nr) if m is None else (V[m], nr[m])
+                for c in mem:
+                    with np.errstate(all="ignore"):
+                        s = _seq_dots(Vg, C[c]) / (nrg * cn[c])
+                    if m is not None:  # scored only the rows probing g
+                        full = np.zeros(n)
+                        full[m] = s
+                        s = full
+                    fscores[c] = s
+            allowed = None if probed is None else [probed[g] for g in cgrp]
+            ids, vecs = pdf[id_col].values, pdf[vec_col].values
+            parts = []
+            for best, pos in _topk_rows(fscores, n_probe, allowed):
+                hit = pos >= 0
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            id_col: ids[hit],
+                            "coarse_id": gid[cgrp[pos[hit]]].astype("int32"),
+                            "cell_id": cid[pos[hit]].astype("int32"),
+                            vec_col: vecs[hit],
+                            "__nrm": nr[hit],
+                            "__ccsim": best[hit],
+                        }
+                    )
+                )
+            yield pd.concat(parts, ignore_index=True)
 
     return src.select(F.col(id_col), F.col(vec_col), F.col("__nrm")).mapInPandas(
         assign, schema
     )
-
-
-def _argmax_cells(
-    slim: DataFrame,
-    n_probe: int,
-    id_col: str,
-    cell_col: str,
-    emit_csim: bool = False,
-) -> DataFrame:
-    """The slim deterministic argmax both assignment shapes share: from
-    (id, cell, __csim) rows pick each id's ``n_probe`` best cells
-    (cosine desc, cell asc — a total order). n_probe=1 runs as a
-    map-side-combining max-of-struct (partial SortAggregate collapses
-    the cross frame's consecutive same-id runs before the exchange);
-    n_probe>1 takes the rank window."""
-    extra = [F.col("__st.s").alias("__ccsim")] if emit_csim else []
-    if n_probe == 1:
-        st = F.max(
-            F.struct(
-                F.col("__csim").alias("s"),
-                (-F.col(cell_col)).cast("long").alias("nc"),
-            )
-        ).alias("__st")
-        return (
-            slim.groupBy(id_col)
-            .agg(st)
-            .select(
-                F.col(id_col),
-                (-F.col("__st.nc")).cast("int").alias(cell_col),
-                *extra,
-            )
-        )
-    w = Window.partitionBy(id_col).orderBy(F.desc("__csim"), F.asc(cell_col))
-    return (
-        slim.withColumn("__prn", F.row_number().over(w))
-        .where(F.col("__prn") <= n_probe)
-        .select(
-            F.col(id_col),
-            F.col(cell_col),
-            *([F.col("__csim").alias("__ccsim")] if emit_csim else []),
-        )
-    )
-
 
 
 def train_ivf_centroids_fp(
@@ -1080,9 +1080,12 @@ def train_ivf_centroids_fp(
     """
     spark = embeddings.sparkSession
     return spark.createDataFrame(
-        _train_ivf_rows(
-            embeddings, n_cells, iterations, id_col, vec_col, fp_scale, sample_mod
-        ),
+        [
+            (c, cv)
+            for c, cv, _ in _train_ivf_rows(
+                embeddings, n_cells, iterations, id_col, vec_col, fp_scale, sample_mod
+            )
+        ],
         "cell_id int, cv array<double>",
     )
 
@@ -1095,14 +1098,16 @@ def _train_ivf_rows(
     vec_col: str,
     fp_scale: int = 10_000_000,
     sample_mod: int = 1,
-) -> list[tuple[int, list[float]]]:
+) -> list[tuple[int, list[float], float]]:
     """:func:`train_ivf_centroids_fp` returning the centroid state as
-    PYTHON rows — the form every driver-side consumer (norms, coarse
-    quantizer, assignment-kernel closures) actually wants. On this
-    engine a single driver ACTION costs ~0.45 s of fixed overhead
-    (py4j + planning + job), so keeping the k×d state out of
+    PYTHON rows (cell_id, cv, cnrm) — the form every driver-side
+    consumer (coarse quantizer, assignment-kernel closures) actually
+    wants. On this engine a single driver ACTION costs ~0.45 s of fixed
+    overhead (py4j + planning + job), so keeping the k×d state out of
     DataFrames between rounds is the difference between ~1 and ~6
     actions per training run."""
+    import numpy as np
+
     if "__nrm" in embeddings.columns:
         # caller already carries the norm (the IVF operators' cached
         # src) — reuse it instead of re-deriving the interpreted fold
@@ -1125,32 +1130,29 @@ def _train_ivf_rows(
             F.col(vec_col).cast("array<double>").alias("cv"),
         )
     )
+
+    def normed(rows: list[tuple[int, list[float]]]) -> list[tuple]:
+        # same sequential fold as __nrm, driver-side: a Project-with-HOF
+        # over a LocalRelation does NOT constant-fold (it ran as a
+        # 32-task job, ~300 ms — the r14 stage profile's top line)
+        if not rows:
+            return []
+        nrm = _seq_norms(np.array([cv for _, cv in rows], dtype=np.float64))
+        return [(c, cv, float(x)) for (c, cv), x in zip(rows, nrm)]
+
     # centroid state lives DRIVER-SIDE between rounds (it is the
-    # broadcast build anyway): one collect per round — the kernel
+    # kernel closure anyway): one collect per round — the kernel
     # assignment plus the means aggregate — and the empty-cell
-    # coalesce, the norm computation, and the array re-assembly all
-    # happen on the collected rows instead of as LocalRelation plans
-    # (a Project-with-HOF over a LocalRelation does NOT constant-fold:
-    # it ran as a 32-task job whose per-task interpreted-projection
-    # instantiation cost ~300 ms — the r14 stage profile's top line)
-    cent_rows = sorted(
-        ((int(r["cell_id"]), [float(x) for x in r["cv"]]) for r in seed.collect()),
-        key=lambda r: r[0],
-    )
-
-    def _py_norm(v: list[float]) -> float:
-        acc = 0.0
-        for x in v:
-            acc = acc + x * x
-        return math.sqrt(acc)
-
-    for _ in range(iterations):
-        cells = [c for c, _ in cent_rows]
-        cvs = [v for _, v in cent_rows]
-        cnrms = [_py_norm(v) for v in cvs]
-        assigned = _assign_cells_arrow_prepared(
-            src, cells, cvs, cnrms, id_col, vec_col, carry_norm=False
+    # coalesce, the norms, and the array re-assembly all happen on the
+    # collected rows
+    cells = normed(
+        sorted(
+            ((int(r["cell_id"]), [float(x) for x in r["cv"]]) for r in seed.collect()),
+            key=lambda r: r[0],
         )
+    )
+    for _ in range(iterations):
+        assigned = _assign_ivf(src, _flat_layout(cells), id_col, vec_col)
         fp = F.floor(F.col("v").cast("double") * fp_scale).cast("long")
         means = (
             assigned.select(
@@ -1167,32 +1169,13 @@ def _train_ivf_rows(
         by_cell: dict[int, dict[int, float]] = {}
         for r in means:
             by_cell.setdefault(int(r["cell_id"]), {})[int(r["pos"])] = float(r["m"])
-        cent_rows = [
-            (
-                c,
-                [m[p] for p in sorted(m)] if (m := by_cell.get(c)) else old,
-            )
-            for c, old in cent_rows
-        ]
-    return cent_rows
-
-
-def _with_cnrm_rows(
-    cent_rows: list[tuple[int, list[float]]],
-) -> tuple[list[int], list[list[float]], list[float]]:
-    """(cells, cvs, cnrms) from trainer rows — norms via the exact
-    sequential fold, driver-side (a Project-with-HOF over a
-    LocalRelation does not constant-fold — it ran as a 32-task job)."""
-
-    def nrm(v: list[float]) -> float:
-        acc = 0.0
-        for x in v:
-            acc = acc + x * x
-        return math.sqrt(acc)
-
-    cells = [c for c, _ in cent_rows]
-    cvs = [v for _, v in cent_rows]
-    return cells, cvs, [nrm(v) for v in cvs]
+        cells = normed(
+            [
+                (c, [m[p] for p in sorted(m)] if (m := by_cell.get(c)) else old)
+                for c, old, _ in cells
+            ]
+        )
+    return cells
 
 
 #: Cell count past which the FINAL full-corpus assignment defaults to
@@ -1240,24 +1223,43 @@ def _seq_dots(mat, vec):
     return acc
 
 
-def _argmax_rows(score_cols):
+def _argmax_rows(score_cols, allowed=None):
     """Deterministic per-row argmax over score columns in ascending
     cell order — ``max(struct(csim, -cell))`` semantics: strictly
     greater wins, NaN outranks every number (Spark double ordering),
     ties keep the earlier (smaller) cell. ``score_cols`` is a list of
-    n-length arrays, one per cell id 0..k-1. Returns (best, bestc)."""
+    n-length arrays, one per cell id 0..k-1; ``allowed`` (one boolean
+    array per column, None = all) restricts each row's candidates.
+    Returns (best, bestc); bestc is -1 where a row has no candidate."""
     import numpy as np
 
     n = score_cols[0].shape[0]
     best = np.zeros(n)
-    bestc = np.zeros(n, dtype=np.int64)
+    bestc = np.full(n, -1, dtype=np.int64)
     have = np.zeros(n, dtype=bool)
     for c, s in enumerate(score_cols):
         better = ~have | (s > best) | (np.isnan(s) & ~np.isnan(best))
+        if allowed is not None:
+            better &= allowed[c]
         best = np.where(better, s, best)
         bestc = np.where(better, c, bestc)
         have |= better
     return best, bestc
+
+
+def _topk_rows(score_cols, k, allowed=None):
+    """Ranks 1..k of every row under the :func:`_argmax_rows` order —
+    the rank window ``row_number() OVER (ORDER BY csim DESC, cell ASC)
+    <= k``. Yields (best, bestc) per rank; bestc is -1 where a row has
+    fewer than that many candidates."""
+    for r in range(k):
+        best, bestc = _argmax_rows(score_cols, allowed)
+        yield best, bestc
+        if r + 1 < k:
+            allowed = [
+                (bestc != c) if allowed is None else (allowed[c] & (bestc != c))
+                for c in range(len(score_cols))
+            ]
 
 
 def _lloyd_fp_rows(
@@ -1313,304 +1315,53 @@ def _lloyd_fp_rows(
     return [(c, [float(x) for x in cv]) for c, cv in enumerate(cents)]
 
 
-def _two_level_structs(
-    centroids: DataFrame,
-    n_cells: int,
-    n_coarse: int | None,
-    coarse_iterations: int,
-    fp_scale: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Build the two-level gate's metadata structures from the fine
-    centroid frame (cell_id, cv, __cnrm): coarse centroids trained
-    over the fine ones (deterministic fixed-point Lloyd's, lowest-
-    cell_id seeds), the fine-cell → coarse-group argmax map ``c2c``
-    (cell_id, coarse_id, cv, __cnrm), and ``used`` — the coarse rows
-    (coarse_id, gv, __gnrm) that won at least one fine cell (a vector
-    routed to an empty group would vanish in the member join).
-
-    Everything here is METADATA scale — k×d state that downstream
-    consumers broadcast — so the whole construction runs DRIVER-SIDE
-    (:func:`_lloyd_fp_rows`): the r13 profile showed the distributed
-    form spending ~6 s of pure job round trips training 3 coarse
-    centroids over 8 fine rows at sf0.1, and at any scale these
-    frames must fit the driver anyway (they are the broadcast build
-    side). Arithmetic is bit-identical to the distributed trainer
-    (pytest-pinned; the semantic_dedup_2l DuckDB twin replays the
-    whole chain hash-exact)."""
-    if n_coarse is None:
-        n_coarse = auto_coarse_cells(n_cells)
-    fine = centroids.select("cell_id", "cv", "__cnrm").collect()
-    c2c_rows, used_rows = _two_level_structs_rows(
-        [int(r["cell_id"]) for r in fine],
-        [[float(x) for x in r["cv"]] for r in fine],
-        [float(r["__cnrm"]) for r in fine],
-        n_coarse,
-        coarse_iterations,
-        fp_scale,
-    )
-    # values are exact (binary IEEE doubles both ways through the
-    # collect/createDataFrame round trip), so the downstream broadcast
-    # joins see the identical map
-    spark = centroids.sparkSession
-    c2c = spark.createDataFrame(
-        c2c_rows, "cell_id int, coarse_id int, cv array<double>, __cnrm double"
-    )
-    used = spark.createDataFrame(
-        used_rows, "coarse_id int, gv array<double>, __gnrm double"
-    )
-    return c2c, used
-
-
 def _two_level_structs_rows(
-    fine_ids: list[int],
-    fine_vecs: list[list[float]],
-    fine_cnrm: list[float],
+    cells: list[tuple[int, list[float], float]],
     n_coarse: int,
     coarse_iterations: int,
     fp_scale: int,
 ) -> tuple[list[tuple], list[tuple]]:
-    """Pure driver-side core of :func:`_two_level_structs`: returns
-    (c2c_rows, used_rows) as Python tuples, so the fused assignment
-    kernel consumes them with no DataFrame round trip (a collect of
-    even a LocalRelation costs ~0.45 s of fixed action overhead on
-    this engine)."""
+    """The two-level :func:`_assign_ivf` layout over trained (cell_id,
+    cv, cnrm) rows: coarse centroids trained OVER the fine ones
+    (:func:`_lloyd_fp_rows`, lowest-cell_id seeds), each fine cell
+    mapped to its nearest coarse group — rows (cell_id, coarse_id, cv,
+    cnrm) — and the coarse rows (coarse_id, gv, gnrm) that won at least
+    one fine cell (a vector routed to an empty group would get no
+    cell).
+
+    The FAISS IVF production shape for the assignment itself: √cells
+    groups (:func:`auto_coarse_cells`) drop the full-corpus scoring
+    from n·cells to ~2·n·√cells (NOTES #75(a)). The approximation is
+    the standard IVF one — a vector whose nearest fine centroid lives
+    in another group gets its group's best member; ``coarse_probe > 1``
+    buys that boundary back. Everything here is METADATA scale, so it
+    runs driver-side: the r13 profile showed the distributed form
+    spending ~6 s of job round trips training 3 coarse centroids over
+    8 fine rows at sf0.1. Arithmetic is bit-identical to the
+    distributed construction (tests/test_local_lloyd.py; the
+    semantic_dedup_2l DuckDB twin replays the whole chain)."""
     import numpy as np
 
+    if not cells:
+        return [], []
     coarse = _lloyd_fp_rows(
-        list(zip(fine_ids, fine_vecs)), n_coarse, coarse_iterations, fp_scale
+        [(c, cv) for c, cv, _ in cells], n_coarse, coarse_iterations, fp_scale
     )
     G = np.array([gv for _, gv in coarse], dtype=np.float64)
     gnrm = _seq_norms(G)
-    Vf = np.array(fine_vecs, dtype=np.float64)
-    cn = np.array(fine_cnrm)
+    Vf = np.array([cv for _, cv, _ in cells], dtype=np.float64)
+    cn = np.array([x for _, _, x in cells])
     with np.errstate(all="ignore"):
         scores = [
             _seq_dots(Vf, G[g]) / (cn * gnrm[g]) for g in range(len(coarse))
         ]
         _, bestg = _argmax_rows(scores)
     c2c_rows = [
-        (fine_ids[i], int(bestg[i]), fine_vecs[i], fine_cnrm[i])
-        for i in range(len(fine_ids))
+        (c, int(g), cv, x) for (c, cv, x), g in zip(cells, bestg)
     ]
     won = sorted(set(int(b) for b in bestg))
     used_rows = [(g, coarse[g][1], float(gnrm[g])) for g in won]
     return c2c_rows, used_rows
-
-
-def _nearest_cells_two_level(
-    src: DataFrame,
-    centroids: DataFrame,
-    n_cells: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    carry_norm: bool,
-    emit_csim: bool = False,
-    n_coarse: int | None = None,
-    coarse_iterations: int = 2,
-    coarse_probe: int = 1,
-    fp_scale: int = 10_000_000,
-) -> DataFrame:
-    """Two-level (coarse-quantizer) variant of :func:`_nearest_cells`
-    — the FAISS IVF production shape for the assignment itself: train
-    √cells coarse centroids OVER the fine centroids (metadata-scale
-    Lloyd's, same deterministic fixed-point trainer), map each fine
-    cell to its nearest coarse group, then assign each vector in two
-    slim argmax passes — nearest coarse group first (n·√cells
-    cosines), nearest fine cell among that group's members second
-    (n·cells/√cells expected). Total scoring ~2·n·√cells vs the flat
-    n·cells — the bound on the third-decade assignment term (NOTES
-    #75(a): 89M cosines at sf10 flat, 2.8B at 2M vectors).
-
-    The approximation is the standard IVF one: a vector whose true
-    nearest fine centroid lives in a different coarse group gets its
-    group's best member instead; ``coarse_probe > 1`` scores the
-    members of the several nearest coarse groups to buy that boundary
-    back at coarse_probe× the fine-pass cost. Every step keeps the
-    determinism contract (lowest-id seeds, cosine-desc/cell-asc total
-    tie orders, fixed-point means), so an unrolled DuckDB twin
-    replays coarse training, the cell→group map, and both argmax
-    passes bit for bit.
-
-    ``centroids`` is the fine frame (cell_id, cv, __cnrm) — metadata
-    scale (√n rows), broadcast everywhere; ``src`` must carry
-    ``__nrm``. Coarse groups that win no fine cell are excluded from
-    the vector-level coarse argmax (their member list is empty, so a
-    vector sent there would vanish).
-    """
-    c2c, used = _two_level_structs(
-        centroids, n_cells, n_coarse, coarse_iterations, fp_scale
-    )
-    if n_probe == 1 and coarse_probe == 1:
-        # both passes fused into ONE Arrow map stage (guide §4.2): c2c
-        # and used are driver-local metadata, so each batch runs the
-        # coarse argmax then the within-group fine argmax with the
-        # bit-exact kernels (_seq_dots/_argmax_rows) and the payload
-        # passes through — zero exchanges and no interpreted per-row
-        # folds, vs 2 crossjoins + 2 argmax exchanges + 2 id joins.
-        # Multiprobe (n_probe/coarse_probe > 1 — tooling and recall
-        # tests) keeps the JVM window shape below.
-        return _assign_two_level_arrow(
-            src, c2c, used, id_col, vec_col, carry_norm, emit_csim
-        )
-    # pass 1: vector -> coarse group(s), slim (n·n_coarse cross frame)
-    vg = (
-        src.select(F.col(id_col), F.col(vec_col), F.col("__nrm"))
-        .crossJoin(F.broadcast(used))
-        .select(
-            F.col(id_col),
-            F.col("coarse_id"),
-            (
-                dot(F.col(vec_col), F.col("gv")) / (F.col("__nrm") * F.col("__gnrm"))
-            ).alias("__csim"),
-        )
-    )
-    v2g = _argmax_cells(vg, coarse_probe, id_col, "coarse_id")
-    # pass 2: vector -> fine cell among its group's members (expected
-    # cells/n_coarse candidates per vector; the vector rides a linear
-    # id join into the streamed broadcast expansion, and only slim
-    # (id, cell, csim) rows reach the argmax)
-    cand = (
-        v2g.join(src.select(F.col(id_col), F.col(vec_col), F.col("__nrm")), id_col)
-        .join(F.broadcast(c2c), "coarse_id")
-        .select(
-            F.col(id_col),
-            F.col("cell_id"),
-            (
-                dot(F.col(vec_col), F.col("cv")) / (F.col("__nrm") * F.col("__cnrm"))
-            ).alias("__csim"),
-        )
-    )
-    assigned = _argmax_cells(cand, n_probe, id_col, "cell_id", emit_csim)
-    payload = [F.col(id_col), F.col(vec_col)] + (
-        [F.col("__nrm")] if carry_norm else []
-    )
-    return assigned.join(src.select(*payload), id_col)
-
-
-def _assign_two_level_arrow(
-    src: DataFrame,
-    c2c: DataFrame,
-    used: DataFrame,
-    id_col: str,
-    vec_col: str,
-    carry_norm: bool,
-    emit_csim: bool = False,
-) -> DataFrame:
-    """The n_probe=1/coarse_probe=1 two-level assignment as one
-    mapInPandas stage — see :func:`_nearest_cells_two_level`. Same
-    deterministic contract: coarse argmax (csim desc, coarse asc, NaN
-    greatest), then fine argmax over that group's member cells (cell
-    asc ties). Requires uniform vector length (callers filter
-    ``size(vec) == dim``)."""
-    return _assign_two_level_arrow_prepared(
-        src,
-        [
-            (int(r["cell_id"]), int(r["coarse_id"]), [float(x) for x in r["cv"]], float(r["__cnrm"]))
-            for r in c2c.collect()
-        ],
-        [
-            (int(r["coarse_id"]), [float(x) for x in r["gv"]], float(r["__gnrm"]))
-            for r in used.collect()
-        ],
-        id_col,
-        vec_col,
-        carry_norm,
-        emit_csim,
-    )
-
-
-def _assign_two_level_arrow_prepared(
-    src: DataFrame,
-    c2c_rows: list[tuple],
-    used_rows: list[tuple],
-    id_col: str,
-    vec_col: str,
-    carry_norm: bool,
-    emit_csim: bool = False,
-) -> DataFrame:
-    """:func:`_assign_two_level_arrow` over already-collected metadata
-    rows (c2c: (cell, coarse, cv, cnrm); used: (coarse, gv, gnrm))."""
-    from pasta_pipeline_spark.operators.util import ensure_package_on_workers
-
-    ensure_package_on_workers(src.sparkSession)
-    urows = sorted(used_rows, key=lambda r: r[0])
-    groups = [int(r[0]) for r in urows]
-    gvs = [[float(x) for x in r[1]] for r in urows]
-    gnrms = [float(r[2]) for r in urows]
-    members: dict[int, list] = {g: [] for g in groups}
-    for r in sorted(c2c_rows, key=lambda r: r[0]):
-        members[int(r[1])].append(
-            (int(r[0]), [float(x) for x in r[2]], float(r[3]))
-        )
-    idt = src.schema[id_col].dataType.simpleString()
-    vt = src.schema[vec_col].dataType.simpleString()
-    fields = [f"{id_col} {idt}", "cell_id int", f"{vec_col} {vt}"]
-    if carry_norm:
-        fields.append("__nrm double")
-    if emit_csim:
-        fields.append("__ccsim double")
-    schema = ", ".join(fields)
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        G = np.array(gvs)
-        gn = np.array(gnrms)
-        mem = {
-            gi: (
-                np.array([cv for _, cv, _ in members[g]]),
-                np.array([cn for _, _, cn in members[g]]),
-                np.array([cid for cid, _, _ in members[g]], dtype=np.int64),
-            )
-            for gi, g in enumerate(groups)
-        }
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
-            )
-            nr = pdf["__nrm"].to_numpy(dtype=np.float64)
-            with np.errstate(all="ignore"):
-                gscores = [
-                    _seq_dots(V, G[gi]) / (nr * gn[gi])
-                    for gi in range(len(groups))
-                ]
-            _, gpos = _argmax_rows(gscores)
-            cell_out = np.zeros(n, dtype=np.int64)
-            csim_out = np.zeros(n)
-            for gi in range(len(groups)):
-                m = gpos == gi
-                if not m.any():
-                    continue
-                Cm, cn_m, cid_m = mem[gi]
-                Vm = V[m]
-                nrm_m = nr[m]
-                with np.errstate(all="ignore"):
-                    fscores = [
-                        _seq_dots(Vm, Cm[c]) / (nrm_m * cn_m[c])
-                        for c in range(len(cid_m))
-                    ]
-                fbest, fpos = _argmax_rows(fscores)
-                cell_out[m] = cid_m[fpos]
-                csim_out[m] = fbest
-            out = {
-                id_col: pdf[id_col].values,
-                "cell_id": cell_out.astype("int32"),
-                vec_col: pdf[vec_col].values,
-            }
-            if carry_norm:
-                out["__nrm"] = nr
-            if emit_csim:
-                out["__ccsim"] = csim_out
-            yield pd.DataFrame(out)
-
-    return src.select(F.col(id_col), F.col(vec_col), F.col("__nrm")).mapInPandas(
-        assign, schema
-    )
 
 
 def ivf_dup_pairs(
@@ -1663,7 +1414,7 @@ def ivf_dup_pairs(
     deterministic ``id % mod == 0`` subset.
 
     ``two_level=None`` auto-switches the FINAL full-corpus assignment
-    to the coarse-quantizer shape (:func:`_nearest_cells_two_level`)
+    to the coarse-quantizer shape (:func:`_two_level_structs_rows`)
     once ``n_cells >= IVF_TWO_LEVEL_MIN_CELLS`` — sampled training
     is already linear, so the flat n·cells assignment was the last
     super-linear term (n^1.5 with cells = √n; two-level is ~n^1.25).
@@ -1677,42 +1428,10 @@ def ivf_dup_pairs(
         pair_verify_parallelism,
     )
 
-    # ONE explicit hash exchange on the id, cached: every downstream
-    # groupBy(id) argmax (trainer + assignment passes) and id join-back
-    # reuses the cached partitioning with NO further exchange (guide
-    # §2.4 — operations keyed the same way share one exchange). The
-    # old round-robin ensure_parallelism bought scan parallelism but
-    # left every argmax/join to re-shuffle the corpus; explicit width
-    # keeps AQE's byte-based coalescing from serializing the
-    # compute-dense cosine stages (r14 targeted fix).
-    src = pair_verify_parallelism(
-        embeddings.where(F.size(F.col(vec_col)) == dim).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"),
-        ),
-        id_col,
-    ).persist()
-    n = None
-    if n_cells is None:
-        n = src.count()
-        n_cells = auto_ivf_cells(n)
-    if train_sample_mod is None:
-        if n is None:
-            n = src.count()
-        train_sample_mod = (
-            1 if n <= LSH_CALIBRATED_N else max(1, n // (64 * n_cells))
-        )
-    # centroid state stays in PYTHON rows end to end (training, norms,
-    # coarse structs, assignment-kernel closures): on this engine a
-    # single driver action costs ~0.45 s fixed, so every avoided
-    # DataFrame round trip of k×d metadata is real wall time. The
-    # multiprobe paths (n_probe/coarse_probe > 1 — tooling and recall
-    # tests) still build the frames the JVM window shape needs.
-    cent_rows = _train_ivf_rows(
-        src, n_cells, iterations, id_col, vec_col, fp_scale, train_sample_mod
+    src, n_cells, cells = _ivf_prep(
+        embeddings, dim, n_cells, iterations, id_col, vec_col, fp_scale,
+        train_sample_mod,
     )
-    cells, cvs, cnrms = _with_cnrm_rows(cent_rows)
     if two_level is None:
         two_level = n_cells >= IVF_TWO_LEVEL_MIN_CELLS
         if two_level:
@@ -1723,51 +1442,26 @@ def ivf_dup_pairs(
                 "oracles replay the FLAT path only",
                 n_cells, IVF_TWO_LEVEL_MIN_CELLS,
             )
-    cent_df = lambda: src.sparkSession.createDataFrame(  # noqa: E731
-        list(zip(cells, cvs, cnrms)),
-        "cell_id int, cv array<double>, __cnrm double",
+    layout = (
+        _two_level_structs_rows(
+            cells,
+            n_coarse if n_coarse is not None else auto_coarse_cells(n_cells),
+            2,
+            fp_scale,
+        )
+        if two_level
+        else _flat_layout(cells)
     )
-    if two_level:
-        if n_probe == 1 and coarse_probe == 1:
-            c2c_rows, used_rows = _two_level_structs_rows(
-                cells,
-                cvs,
-                cnrms,
-                n_coarse if n_coarse is not None else auto_coarse_cells(n_cells),
-                2,
-                fp_scale,
-            )
-            assigned = _assign_two_level_arrow_prepared(
-                src, c2c_rows, used_rows, id_col, vec_col, carry_norm=True
-            )
-        else:
-            assigned = _nearest_cells_two_level(
-                src,
-                cent_df(),
-                n_cells,
-                n_probe,
-                id_col,
-                vec_col,
-                carry_norm=True,
-                n_coarse=n_coarse,
-                coarse_probe=coarse_probe,
-                fp_scale=fp_scale,
-            )
-    elif n_probe == 1:
-        assigned = _assign_cells_arrow_prepared(
-            src, cells, cvs, cnrms, id_col, vec_col, carry_norm=True
-        )
-    else:
-        assigned = _nearest_cells(
-            src, cent_df(), n_probe, id_col, vec_col, carry_norm=True
-        )
+    assigned = _assign_ivf(src, layout, id_col, vec_col, n_probe, coarse_probe)
     # pin the pair-verify exchange: the within-cell join's stage pays a
     # 64-dim cosine per candidate row — compute-dense, byte-light, the
     # exact shape AQE's byte-based coalescing serializes to one task
     # (r13 stage profile: a 1.77 s single-task verify over a 548 KB
     # shuffle). Both pair sides derive from this one frame, so the
     # explicit exchange is shared.
-    assigned = pair_verify_parallelism(assigned, "cell_id")
+    assigned = pair_verify_parallelism(
+        assigned.select(id_col, "cell_id", vec_col, "__nrm"), "cell_id"
+    )
     a = assigned.select(
         F.col(id_col).alias("id_a"),
         "cell_id",
@@ -1780,9 +1474,11 @@ def ivf_dup_pairs(
         F.col(vec_col).alias("vb"),
         F.col("__nrm").alias("__nb"),
     )
-    sim = (dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))).alias(
-        "sim"
-    )
+    # a zero vector has no cosine: NULL fails the threshold instead of
+    # raising DIVIDE_BY_ZERO under ANSI
+    sim = F.try_divide(
+        dot(F.col("va"), F.col("vb")), F.col("__na") * F.col("__nb")
+    ).alias("sim")
     pairs = (
         a.join(b, "cell_id")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -2102,35 +1798,10 @@ def ivf_cell_profile(
     and assignment as :func:`ivf_dup_pairs`, so the profile describes
     the gate that would actually run.
     """
-    from pasta_pipeline_spark.operators.util import (
-        attach_cached_deps,
-        pair_verify_parallelism,
-    )
+    from pasta_pipeline_spark.operators.util import attach_cached_deps
 
-    # ONE explicit hash exchange on the id, cached: every downstream
-    # groupBy(id) argmax (trainer + assignment passes) and id join-back
-    # reuses the cached partitioning with NO further exchange (guide
-    # §2.4 — operations keyed the same way share one exchange). The
-    # old round-robin ensure_parallelism bought scan parallelism but
-    # left every argmax/join to re-shuffle the corpus; explicit width
-    # keeps AQE's byte-based coalescing from serializing the
-    # compute-dense cosine stages (r14 targeted fix).
-    src = pair_verify_parallelism(
-        embeddings.where(F.size(F.col(vec_col)) == dim).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"),
-        ),
-        id_col,
-    ).persist()
-    if n_cells is None:
-        n_cells = auto_ivf_cells(src.count())
-    cells, cvs, cnrms = _with_cnrm_rows(
-        _train_ivf_rows(src, n_cells, iterations, id_col, vec_col)
-    )
-    assigned = _assign_cells_arrow_prepared(
-        src, cells, cvs, cnrms, id_col, vec_col, carry_norm=False
-    )
+    src, _, cells = _ivf_prep(embeddings, dim, n_cells, iterations, id_col, vec_col)
+    assigned = _assign_ivf(src, _flat_layout(cells), id_col, vec_col)
     out = (
         assigned.groupBy("cell_id")
         .agg(
@@ -2164,71 +1835,31 @@ def ivf_assign_profile(
     trained geometry, made data (the :func:`ivf_cell_profile`
     counterpart for the assignment term, NOTES #75(a)):
 
-    - ``cosines_flat`` = n·cells — what :func:`_nearest_cells` scores;
+    - ``cosines_flat`` = n·cells — what the flat assignment scores;
     - ``cosines_coarse_pass`` = n·used_groups and
       ``cosines_fine_pass`` = Σ_g assigned(g)·members(g) — the two
-      passes :func:`_nearest_cells_two_level` scores, summed in
-      ``cosines_two_level``.
+      passes the two-level assignment (:func:`_two_level_structs_rows`)
+      scores, summed in ``cosines_two_level``.
 
     The fine pass is computed from the REAL coarse assignment counts,
     not the balanced expectation, so a skewed coarse map shows up here
     the same way a hot cell shows up in the cell profile. One row.
     """
-    from pasta_pipeline_spark.operators.util import (
-        attach_cached_deps,
-        pair_verify_parallelism,
-    )
+    from pasta_pipeline_spark.operators.util import attach_cached_deps
 
-    # ONE explicit hash exchange on the id, cached: every downstream
-    # groupBy(id) argmax (trainer + assignment passes) and id join-back
-    # reuses the cached partitioning with NO further exchange (guide
-    # §2.4 — operations keyed the same way share one exchange). The
-    # old round-robin ensure_parallelism bought scan parallelism but
-    # left every argmax/join to re-shuffle the corpus; explicit width
-    # keeps AQE's byte-based coalescing from serializing the
-    # compute-dense cosine stages (r14 targeted fix).
-    src = pair_verify_parallelism(
-        embeddings.where(F.size(F.col(vec_col)) == dim).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"),
-        ),
-        id_col,
-    ).persist()
-    if n_cells is None:
-        n_cells = auto_ivf_cells(src.count())
+    src, n_cells, cells = _ivf_prep(embeddings, dim, n_cells, iterations, id_col, vec_col)
     if n_coarse is None:
         n_coarse = auto_coarse_cells(n_cells)
-    cells, cvs, cnrms = _with_cnrm_rows(
-        _train_ivf_rows(src, n_cells, iterations, id_col, vec_col)
-    )
-    c2c_rows, used_rows = _two_level_structs_rows(
-        cells, cvs, cnrms, n_coarse, coarse_iterations, 10_000_000
-    )
-    spark = src.sparkSession
-    c2c = spark.createDataFrame(
-        c2c_rows, "cell_id int, coarse_id int, cv array<double>, __cnrm double"
-    )
-    used = spark.createDataFrame(
-        used_rows, "coarse_id int, gv array<double>, __gnrm double"
-    )
-    vg = (
-        src.select(F.col(id_col), F.col(vec_col), F.col("__nrm"))
-        .crossJoin(F.broadcast(used))
-        .select(
-            F.col(id_col),
-            F.col("coarse_id"),
-            (
-                dot(F.col(vec_col), F.col("gv")) / (F.col("__nrm") * F.col("__gnrm"))
-            ).alias("__csim"),
-        )
-    )
-    v2g = _argmax_cells(vg, 1, id_col, "coarse_id")
-    members = c2c.groupBy("coarse_id").agg(
-        F.count(F.lit(1)).cast("long").alias("__members")
+    c2c, used = _two_level_structs_rows(cells, n_coarse, coarse_iterations, 10_000_000)
+    # the coarse pass is the two-level kernel's coarse_id; the fine
+    # pass scores every member of the vector's group
+    members = src.sparkSession.createDataFrame(
+        sorted(Counter(g for _, g, _, _ in c2c).items()),
+        "coarse_id int, __members long",
     )
     per_group = (
-        v2g.groupBy("coarse_id")
+        _assign_ivf(src, (c2c, used), id_col, vec_col)
+        .groupBy("coarse_id")
         .agg(F.count(F.lit(1)).cast("long").alias("__assigned"))
         .join(F.broadcast(members), "coarse_id")
         .agg(
@@ -2238,29 +1869,19 @@ def ivf_assign_profile(
         )
     )
     n_vec = src.agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
-    n_used = used.agg(
-        F.count(F.lit(1)).cast("long").alias("n_coarse_used")
-    )
-    out = (
-        n_vec.crossJoin(F.broadcast(n_used))
-        .crossJoin(F.broadcast(per_group))
-        .select(
-            "n_vectors",
-            F.lit(n_cells).cast("long").alias("n_cells"),
-            F.lit(n_coarse).cast("long").alias("n_coarse"),
-            "n_coarse_used",
-            (F.col("n_vectors") * F.lit(n_cells)).cast("long").alias("cosines_flat"),
-            (F.col("n_vectors") * F.col("n_coarse_used"))
-            .cast("long")
-            .alias("cosines_coarse_pass"),
-            "cosines_fine_pass",
-            (
-                F.col("n_vectors") * F.col("n_coarse_used")
-                + F.col("cosines_fine_pass")
-            )
-            .cast("long")
-            .alias("cosines_two_level"),
-        )
+    out = n_vec.crossJoin(F.broadcast(per_group)).select(
+        "n_vectors",
+        F.lit(n_cells).cast("long").alias("n_cells"),
+        F.lit(n_coarse).cast("long").alias("n_coarse"),
+        F.lit(len(used)).cast("long").alias("n_coarse_used"),
+        (F.col("n_vectors") * F.lit(n_cells)).cast("long").alias("cosines_flat"),
+        (F.col("n_vectors") * F.lit(len(used)))
+        .cast("long")
+        .alias("cosines_coarse_pass"),
+        "cosines_fine_pass",
+        (F.col("n_vectors") * F.lit(len(used)) + F.col("cosines_fine_pass"))
+        .cast("long")
+        .alias("cosines_two_level"),
     )
     return attach_cached_deps(out, [src])
 
@@ -2297,33 +1918,13 @@ def semantic_dedup_diverse(
         pair_verify_parallelism,
     )
 
-    # ONE explicit hash exchange on the id, cached: every downstream
-    # groupBy(id) argmax (trainer + assignment passes) and id join-back
-    # reuses the cached partitioning with NO further exchange (guide
-    # §2.4 — operations keyed the same way share one exchange). The
-    # old round-robin ensure_parallelism bought scan parallelism but
-    # left every argmax/join to re-shuffle the corpus; explicit width
-    # keeps AQE's byte-based coalescing from serializing the
-    # compute-dense cosine stages (r14 targeted fix).
-    src = pair_verify_parallelism(
-        embeddings.where(F.size(F.col(vec_col)) == dim).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"),
-        ),
-        id_col,
-    ).persist()
-    if n_cells is None:
-        n_cells = auto_ivf_cells(src.count())
-    cells, cvs, cnrms = _with_cnrm_rows(
-        _train_ivf_rows(src, n_cells, iterations, id_col, vec_col)
-    )
-    assigned = _assign_cells_arrow_prepared(
-        src, cells, cvs, cnrms, id_col, vec_col, carry_norm=True, emit_csim=True
-    )
+    src, _, cells = _ivf_prep(embeddings, dim, n_cells, iterations, id_col, vec_col)
+    assigned = _assign_ivf(src, _flat_layout(cells), id_col, vec_col)
     # pin the pair-verify exchange (see ivf_dup_pairs): both pair sides
     # share this one explicit-width exchange
-    assigned = pair_verify_parallelism(assigned, "cell_id")
+    assigned = pair_verify_parallelism(
+        assigned.select(id_col, "cell_id", vec_col, "__nrm", "__ccsim"), "cell_id"
+    )
     a = assigned.select(
         F.col(id_col).alias("id_a"),
         "cell_id",
@@ -2338,9 +1939,11 @@ def semantic_dedup_diverse(
         F.col("__nrm").alias("__nb"),
         F.col("__ccsim").alias("cs_b"),
     )
-    sim = (dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))).alias(
-        "sim"
-    )
+    # a zero vector has no cosine: NULL fails the threshold instead of
+    # raising DIVIDE_BY_ZERO under ANSI
+    sim = F.try_divide(
+        dot(F.col("va"), F.col("vb")), F.col("__na") * F.col("__nb")
+    ).alias("sim")
     pairs = (
         a.join(b, "cell_id")
         .filter(F.col("id_a") < F.col("id_b"))

@@ -32,13 +32,6 @@ STOPWORDS = {
 }
 
 
-def token_count_ws(text: Column | str) -> Column:
-    """Whitespace token count (Python split semantics)."""
-    from pasta_pipeline_spark.functions.text import word_count
-
-    return word_count(text)
-
-
 def token_count_lexical(text: Column | str) -> Column:
     """BPE-ish token count: letter runs + digit runs + punctuation
     marks. A cheap, deterministic proxy for subword token budgets."""

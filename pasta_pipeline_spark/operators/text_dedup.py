@@ -479,15 +479,6 @@ def _minhash_exprs(num_hashes: int) -> list[Column]:
     return exprs
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 64
-) -> DataFrame:
-    """(doc, mh0..mh{k-1}) MinHash signature from n-token shingles."""
-    sh = _shingle_table(df, id_col, text_col, n)
-    xh = sh.select("doc", F.xxhash64(F.col("sh")).alias("xh"))
-    return xh.groupBy("doc").agg(*_minhash_exprs(num_hashes))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,

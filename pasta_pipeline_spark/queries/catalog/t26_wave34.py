@@ -1,13 +1,15 @@
 """Catalog tier: wave 34 (r13) — the two-level (coarse-quantizer) IVF
 assignment, bounding the cluster gate's THIRD decade.
 
-The r12 verdict's top ask: `_nearest_cells` pays n·cells cosines for
+The r12 verdict's top ask: the flat assignment pays n·cells cosines for
 the final full-corpus assignment — with cells = √n that is n^1.5 (89M
 cosines at sf10, 2.8B at 2M vectors; NOTES #75(a)). The two-level
 shape trains √cells coarse centroids OVER the fine centroids
 (metadata-scale deterministic Lloyd's), maps each fine cell to its
-nearest coarse group, and assigns each vector in two slim argmax
-passes — total scoring ~2·n·√cells ≈ n^1.25. This wave registers the
+nearest coarse group, and assigns each vector in two argmax passes
+(coarse group, then fine cell among its members — both inside the one
+assignment kernel, `similarity._assign_ivf`) — total scoring
+~2·n·√cells ≈ n^1.25. This wave registers the
 forced-two-level SemDedup (the auto path only engages past
 IVF_TWO_LEVEL_MIN_CELLS, so gate-scale corpora would never exercise
 it), its measured recall audit, and the assignment-cost profile whose

@@ -173,11 +173,6 @@ def load_table(spark, sf_dir: str, name: str):
     return df
 
 
-def load_all(spark, sf_dir: str) -> dict:
-    """Read every testdata table; keys match TESTDATA_TABLES."""
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 def register_views(spark, sf_dir: str, tables: list[str] | None = None) -> None:
     """Register every testdata table as a session temp view so the
     engine is usable from RAW SQL, the way the reference's users

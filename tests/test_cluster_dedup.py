@@ -9,6 +9,11 @@ monotonicity, trainer determinism, and the auto recipe's boundaries.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,6 +27,16 @@ def emb(spark):
 
 def _pairs_set(df):
     return {(r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect()}
+
+
+def _with_nrm(df):
+    from pasta_pipeline_spark.operators.similarity import dot
+
+    return df.select(
+        "vec_id",
+        "embedding",
+        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__nrm"),
+    )
 
 
 def test_auto_ivf_cells_boundaries():
@@ -164,26 +179,16 @@ def test_diverse_keep_contract(spark, emb):
     pair (paper keep policy): recompute the loser set from the gate's
     pairs + per-vector centroid sims and compare."""
     from pasta_pipeline_spark.operators.similarity import (
-        _nearest_cells,
-        dot,
+        _assign_ivf,
+        _flat_layout,
+        _train_ivf_rows,
         ivf_dup_pairs,
         semantic_dedup_diverse,
-        train_ivf_centroids_fp,
     )
-    from pyspark.sql import functions as F
 
-    src = emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__nrm"),
-    )
-    cent = train_ivf_centroids_fp(emb, n_cells=6, iterations=2)
-    cent = cent.select(
-        "cell_id", "cv", F.sqrt(dot(F.col("cv"), F.col("cv"))).alias("__cnrm")
-    )
-    assigned = _nearest_cells(
-        src, cent, 1, "vec_id", "embedding", carry_norm=False, emit_csim=True
-    )
+    src = _with_nrm(emb)
+    cells = _train_ivf_rows(src, 6, 2, "vec_id", "embedding")
+    assigned = _assign_ivf(src, _flat_layout(cells), "vec_id", "embedding")
     cs = {r.vec_id: r["__ccsim"] for r in assigned.collect()}
     pairs = ivf_dup_pairs(emb, 0.3, dim=64, n_cells=6, iterations=2).collect()
     want = set()
@@ -387,3 +392,191 @@ def test_two_level_keep_contract(spark, emb):
     rows = out.collect()
     assert len(rows) == emb.count()
     assert {r.vec_id for r in rows if r.kept == 0} == dropped_want
+
+
+# ---- one assignment kernel: multiprobe exactness and edge inputs ----
+
+
+def _seq_norm(M):
+    acc = np.zeros(M.shape[0])
+    for j in range(M.shape[1]):
+        acc = acc + M[:, j] * M[:, j]
+    return np.sqrt(acc)
+
+
+def _seq_cos(V, C):
+    """n×k cosines with the sequential per-dim fold the engines use."""
+    acc = np.zeros((V.shape[0], C.shape[0]))
+    for j in range(V.shape[1]):
+        acc = acc + V[:, j, None] * C[None, :, j]
+    with np.errstate(all="ignore"):
+        return acc / (_seq_norm(V)[:, None] * _seq_norm(C)[None, :])
+
+
+def _ranked(scores, ids, k):
+    """The k best ids under the gate's total order: cosine desc, NaN
+    greatest, id asc."""
+
+    def key(i):
+        s = scores[i]
+        return (0, 0.0, ids[i]) if math.isnan(s) else (1, -s, ids[i])
+
+    return [ids[i] for i in sorted(range(len(ids)), key=key)[:k]]
+
+
+def _layout(cells, cfg):
+    from pasta_pipeline_spark.operators.similarity import (
+        _flat_layout,
+        _two_level_structs_rows,
+    )
+
+    if cfg.get("two_level"):
+        return _two_level_structs_rows(cells, cfg["n_coarse"], 2, 10_000_000)
+    return _flat_layout(cells)
+
+
+def _probed_cells(df, cfg):
+    """(kernel, NumPy) probed (id, cell) sets for ``df`` over the
+    trained 8-cell geometry ivf_dup_pairs builds for ``cfg``."""
+    from pasta_pipeline_spark.operators.similarity import (
+        _assign_ivf,
+        _train_ivf_rows,
+    )
+
+    src = _with_nrm(df)
+    cells = _train_ivf_rows(src, 8, 2, "vec_id", "embedding")
+    layout = _layout(cells, cfg)
+    n_probe, coarse_probe = cfg.get("n_probe", 1), cfg.get("coarse_probe", 1)
+    got = {
+        (r.vec_id, r.cell_id)
+        for r in _assign_ivf(
+            src, layout, "vec_id", "embedding", n_probe, coarse_probe
+        ).collect()
+    }
+
+    rows = sorted(
+        (int(r.vec_id), [float(x) for x in r.embedding]) for r in df.collect()
+    )
+    want = set()
+    if not rows:
+        return got, want, layout
+    V = np.array([v for _, v in rows])
+    c2c, used = layout
+    cell_ids = [c for c, _, _, _ in c2c]
+    S = _seq_cos(V, np.array([cv for _, _, cv, _ in c2c]))
+    if len(used) > 1:
+        gids = [g for g, _, _ in used]
+        GS = _seq_cos(V, np.array([gv for _, gv, _ in used]))
+    for i, (vid, _) in enumerate(rows):
+        groups = (
+            set(_ranked(GS[i], gids, coarse_probe)) if len(used) > 1 else {used[0][0]}
+        )
+        cand = [k for k, (_, g, _, _) in enumerate(c2c) if g in groups]
+        want |= {
+            (vid, c)
+            for c in _ranked(S[i, cand], [cell_ids[k] for k in cand], n_probe)
+        }
+    return got, want, layout
+
+
+#: ivf_dup_pairs(emb, 0.3, dim=64, n_cells=8, iterations=2, **cfg) pair
+#: sets recorded from the JVM crossJoin + rank-window multiprobe shapes
+#: the kernel replaced: (count, sha256 of the sorted json pair list)
+MULTIPROBE = [
+    pytest.param(
+        dict(two_level=False, n_probe=2), 670, "ea29a3517f313a24", id="flat-probe2"
+    ),
+    pytest.param(
+        dict(two_level=False, n_probe=3), 888, "17d3c0d0bd1ca261", id="flat-probe3"
+    ),
+    pytest.param(
+        dict(two_level=True, n_coarse=3, coarse_probe=2, n_probe=2),
+        676,
+        "d752f8c4a3af7923",
+        id="two-level-coarse3x2-probe2",
+    ),
+]
+
+
+@pytest.mark.parametrize("cfg,n_pairs,digest", MULTIPROBE)
+def test_multiprobe_matches_numpy_ranking(spark, emb, cfg, n_pairs, digest):
+    """Every vector's probed-cell set equals an independent NumPy
+    ranking over the trained centroid rows (top coarse_probe groups,
+    then top n_probe cells among their members), and the gate's pair
+    sets are the ones the JVM multiprobe shapes produced."""
+    from pasta_pipeline_spark.operators.similarity import ivf_dup_pairs
+
+    got, want, _ = _probed_cells(emb, cfg)
+    assert got == want
+    pairs = sorted(
+        _pairs_set(ivf_dup_pairs(emb, 0.3, dim=64, n_cells=8, iterations=2, **cfg))
+    )
+    assert len(pairs) == n_pairs
+    assert hashlib.sha256(json.dumps(pairs).encode()).hexdigest()[:16] == digest
+
+
+EDGE_ID = 1_000_000
+
+EDGE_MODES = {
+    "flat": dict(two_level=False),
+    "two_level": dict(two_level=True, n_coarse=3),
+    "multiprobe": dict(two_level=True, n_coarse=3, coarse_probe=2, n_probe=2),
+}
+
+
+def _edge_input(spark, emb, kind):
+    schema = "vec_id long, embedding array<float>"
+    base = emb.select("vec_id", "embedding").where(F.col("vec_id") < 60)
+    if kind == "zero":
+        return base.unionByName(spark.createDataFrame([(EDGE_ID, [0.0] * 64)], schema))
+    if kind == "nan":
+        return base.unionByName(
+            spark.createDataFrame([(EDGE_ID, [float("nan")] + [0.5] * 63)], schema)
+        )
+    if kind == "empty":
+        return spark.createDataFrame([], schema)
+    return base.where(F.col("vec_id") < 5)  # n_cells=8 > n=5
+
+
+@pytest.mark.parametrize("mode", list(EDGE_MODES))
+@pytest.mark.parametrize("kind", ["zero", "nan", "empty", "n_cells_gt_n"])
+def test_ivf_gate_edge_inputs(spark, emb, kind, mode):
+    """Edge inputs through flat, two-level and multiprobe assignment.
+    None may raise. A zero or NaN vector scores NaN against every cell
+    and lands in the lowest cell(s) — the argmax/rank-window order,
+    NaN greatest, cell asc — and pairs with nothing.
+
+    What the JVM-shape code did before the single kernel:
+    - zero: raised DIVIDE_BY_ZERO (ANSI) in all three modes — the pair
+      verify's cosine divided by the zero norm (and so did the JVM
+      multiprobe scoring). Kept: the lowest-cell assignment.
+    - nan: flat and two-level put it in the lowest cell and paired it
+      with nothing (the Arrow kernel returns its NaN norm as NULL);
+      multiprobe put it in the lowest cells but paired it with every
+      cell-mate at sim NaN (Spark ranks NaN above any threshold). Kept:
+      the flat and two-level behaviour, now in every mode.
+    - empty: flat returned no rows; two-level and multiprobe raised
+      ValueError training the coarse quantizer over zero cells. Kept:
+      no rows.
+    - n_cells > n: min(n_cells, n) cells, no pairs at 0.3. Kept."""
+    from pasta_pipeline_spark.operators.similarity import ivf_dup_pairs
+
+    cfg = EDGE_MODES[mode]
+    df = _edge_input(spark, emb, kind)
+    pairs = ivf_dup_pairs(df, 0.3, dim=64, n_cells=8, iterations=2, **cfg).collect()
+    assert all(EDGE_ID not in (p.id_a, p.id_b) for p in pairs)
+    if kind in ("empty", "n_cells_gt_n"):
+        assert pairs == []
+
+    got, want, (c2c, used) = _probed_cells(df, cfg)
+    assert got == want
+    if kind == "empty":
+        assert got == set()
+    if kind == "n_cells_gt_n":
+        assert len(c2c) == 5
+    if kind in ("zero", "nan"):
+        lowest_groups = sorted(g for g, _, _ in used)[: cfg.get("coarse_probe", 1)]
+        lowest = sorted(c for c, g, _, _ in c2c if g in lowest_groups)
+        assert {c for i, c in got if i == EDGE_ID} == set(
+            lowest[: cfg.get("n_probe", 1)]
+        )

@@ -79,13 +79,29 @@ def test_local_lloyd_empty_cell_keeps_seed(spark):
     assert dist == local
 
 
+def _argmax_cells(slim, id_col, cell_col):
+    """Reference argmax — the pre-kernel JVM shape: each id's best cell
+    by ``max(struct(csim, -cell))`` (cosine desc, NaN greatest, cell
+    asc) over (id, cell, __csim) rows."""
+    st = F.max(
+        F.struct(
+            F.col("__csim").alias("s"),
+            (-F.col(cell_col)).cast("long").alias("nc"),
+        )
+    ).alias("__st")
+    return (
+        slim.groupBy(id_col)
+        .agg(st)
+        .select(F.col(id_col), (-F.col("__st.nc")).cast("int").alias(cell_col))
+    )
+
+
 def test_two_level_structs_local_matches_spark_construction(spark, emb):
     """c2c/used from the driver-side construction equal the original
     distributed construction (broadcast-crossjoin argmax + semi-join),
     value for value."""
     from pasta_pipeline_spark.operators.similarity import (
-        _argmax_cells,
-        _two_level_structs,
+        _two_level_structs_rows,
         dot,
         train_ivf_centroids_fp,
     )
@@ -95,7 +111,15 @@ def test_two_level_structs_local_matches_spark_construction(spark, emb):
         "cv",
         F.sqrt(dot(F.col("cv"), F.col("cv"))).alias("__cnrm"),
     )
-    c2c, used = _two_level_structs(cent, 8, None, 2, 10_000_000)
+    c2c, used = _two_level_structs_rows(
+        [
+            (int(r["cell_id"]), [float(x) for x in r["cv"]], float(r["__cnrm"]))
+            for r in cent.collect()
+        ],
+        3,
+        2,
+        10_000_000,
+    )
 
     # reference: the pre-r14 distributed construction
     coarse = train_ivf_centroids_fp(
@@ -115,7 +139,6 @@ def test_two_level_structs_local_matches_spark_construction(spark, emb):
         cent.crossJoin(F.broadcast(coarse)).select(
             F.col("cell_id"), F.col("coarse_id"), gsim
         ),
-        1,
         "cell_id",
         "coarse_id",
     ).join(cent, "cell_id")
@@ -123,14 +146,7 @@ def test_two_level_structs_local_matches_spark_construction(spark, emb):
         ref_c2c.select("coarse_id").distinct(), "coarse_id", "left_semi"
     )
 
-    got_c2c = {
-        int(r["cell_id"]): (
-            int(r["coarse_id"]),
-            [float(x) for x in r["cv"]],
-            float(r["__cnrm"]),
-        )
-        for r in c2c.collect()
-    }
+    got_c2c = {c: (g, cv, cn) for c, g, cv, cn in c2c}
     want_c2c = {
         int(r["cell_id"]): (
             int(r["coarse_id"]),
@@ -141,10 +157,7 @@ def test_two_level_structs_local_matches_spark_construction(spark, emb):
     }
     assert got_c2c == want_c2c
 
-    got_used = {
-        int(r["coarse_id"]): ([float(x) for x in r["gv"]], float(r["__gnrm"]))
-        for r in used.collect()
-    }
+    got_used = {g: (gv, gn) for g, gv, gn in used}
     want_used = {
         int(r["coarse_id"]): ([float(x) for x in r["gv"]], float(r["__gnrm"]))
         for r in ref_used.collect()
